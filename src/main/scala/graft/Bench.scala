@@ -15,11 +15,32 @@ import java.nio.file.{Files, Paths}
   * long lines, which cost rounds 1-3 their first ~19 queries).
   */
 object Bench {
-  private def median(xs: Seq[Double]): Double = BenchStats.median(xs)
+  /** The true median: for an even rep count, the mean of the two middle
+    * elements (the upper middle alone biases every even-rep median
+    * high). */
+  private def median(xs: Seq[Double]): Double = {
+    require(xs.nonEmpty, "median of an empty rep vector")
+    val s = xs.sorted
+    val n = s.length
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+  }
+
+  /** Between queries: drop the cached frames so one query's persisted
+    * lineage can't subsidize the next one's timing, then force a GC.
+    * Shuffle FILES are deleted by the ContextCleaner only once the
+    * driver collects the exchange RDDs that own them, and a barely
+    * pressured bench heap can go a whole run without a collection —
+    * files then pile up until disk, not any single query, is the limit
+    * (a scaled-up rep once died ENOSPC under ~60 GB of earlier queries'
+    * shuffle files while its own peak fit with margin). */
+  private def release(spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.catalog.clearCache()
+    System.gc()
+  }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val sfDir = Env.string("SPARK_GRAFT_SF_DIR").getOrElse("/root/testdata/sf0.1")
+    val reps = Env.positiveInt("SPARK_GRAFT_REPS").getOrElse(3)
     val spark = GraftSession.local(GraftSession.envCpus)
     // local iteration aids (the driver never sets either, so the contract
     // output is unchanged): SPARK_GRAFT_ONLY=q_a,q_b times a subset;
@@ -28,9 +49,8 @@ object Bench {
     // all-pairs shuffle is quadratic by construction and exceeds the
     // single box's spill disk at 500k+ docs (they gate correctness, not
     // the scale path).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").toSet)
-      .getOrElse(Set.empty[String])
+    val only = Env.names("SPARK_GRAFT_ONLY")
+    val skip = Env.names("SPARK_GRAFT_SKIP").getOrElse(Set.empty[String])
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) && !skip(n) }
     // Streaming queries pay a first-run cost that is pure warm-up —
@@ -49,8 +69,7 @@ object Bench {
           s"[bench] warm-up of $name failed: " +
             s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      System.gc() // see LegBench scaladoc: frees shuffle files via ContextCleaner
+      release(spark)
     }
     // name -> (per-rep seconds for successful reps, first error if any)
     val runs: Seq[(String, Seq[Double], Option[String])] = {
@@ -63,10 +82,7 @@ object Bench {
               Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
           }
           val dt = (System.nanoTime() - t0) / 1e9
-          // drop caches so one query's persisted lineage can't subsidize
-          // the next query's timing
-          spark.catalog.clearCache()
-          System.gc() // see LegBench scaladoc: frees shuffle files via ContextCleaner
+          release(spark)
           (name, dt, err)
         }
       }

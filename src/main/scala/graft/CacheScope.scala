@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable.ListBuffer
+import scala.util.control.NonFatal
 
 /** Cache lifecycle for library-internal persists.
   *
@@ -23,6 +24,8 @@ import scala.collection.mutable.ListBuffer
   * nondeterministically.
   */
 object CacheScope {
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.CacheScope")
 
   // One scope's registrations plus a closed flag: pool threads created
   // while a scope was open inherit the reference forever, so a reused
@@ -63,8 +66,8 @@ object CacheScope {
     * this way). With no scope active the cleanup is NOT run — the staged
     * resource lives for the session and the embedding process manages
     * it, mirroring `persist`'s no-scope contract. Cleanups run AFTER the
-    * scope's unpersists, each isolated (one failing cleanup never blocks
-    * the rest). */
+    * scope's unpersists, each isolated: a failing cleanup is logged at
+    * WARN and never blocks the rest. */
   def defer(cleanup: () => Unit): Unit = {
     val scope = current.get()
     if (scope != null) scope.synchronized {
@@ -86,7 +89,11 @@ object CacheScope {
         (mine.frames.toList, mine.cleanups.toList)
       }
       registered.foreach(_.unpersist(blocking = false))
-      cleanups.foreach(c => try c() catch { case _: Exception => () })
+      cleanups.foreach { c =>
+        try c() catch {
+          case NonFatal(e) => log.warn("CacheScope cleanup failed; running the rest", e)
+        }
+      }
     }
   }
 }

@@ -7,7 +7,7 @@ package graft
   * choices, and shuffle counts before trusting a plan at 100 TB. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val sfDir = Env.string("SPARK_GRAFT_SF_DIR").getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq

@@ -197,9 +197,8 @@ object Flagship {
     * seams remove the checkpoint jobs, which dominate.
     *
     * `probe`: stage-seam attribution hook, identity by default (see
-    * [[graft.text.Pipelines.StageProbe]]) — `LegBench flagship` passes
-    * a materializing probe to read per-stage walls off the production
-    * composition. */
+    * [[graft.text.Pipelines.StageProbe]]) — a materializing probe
+    * reads per-stage walls off the production composition. */
   def curationPipeline(spark: SparkSession, dir: String,
       forceTwoLevel: Boolean = false,
       lazyCheckpoints: Boolean = false,

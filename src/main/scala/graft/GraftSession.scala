@@ -86,9 +86,9 @@ object GraftSession {
       // .close (thread-dump witness, r18 plans/). The engine's
       // checkpoints are per-invocation scratch (fresh dir every run), so
       // integrity re-verification buys nothing here; deployments with
-      // durable checkpoints can re-enable via SPARK_GRAFT_CKPT_CHECKSUM.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+      // durable checkpoints can re-enable it with `.config(k, "true")`
+      // on the returned builder.
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       // r19: RocksDB commits write a FULL snapshot (zip + upload of the
       // store directory) per store per micro-batch; changelog
       // checkpointing appends the batch's puts to a small changelog
@@ -99,78 +99,24 @@ object GraftSession {
       // it is ~5% SLOWER (the snapshot zip is cheap; the changelog adds
       // version-replay lineage the offline statestore reader must walk),
       // so the LOCAL default stays off and the driver's bench stays
-      // comparable; large-state deployments enable via
-      // SPARK_GRAFT_ROCKSDB_CHANGELOG=true. Results are unchanged either
-      // way — reconstruction replays changelog over the last snapshot.
+      // comparable; large-state deployments enable it with
+      // `.config(k, "true")` on the returned builder. Results are
+      // unchanged either way — reconstruction replays changelog over the
+      // last snapshot.
       .config(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "false"))
+        "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
 
-  /** Local session sized to `cpus` threads — the mains' form.
-    * `SPARK_GRAFT_SHUFFLE_PARTITIONS` decouples the partition count
-    * from the thread count (the default ties them): shuffle-heavy legs
-    * whose per-partition sort exceeds per-task execution memory need
-    * MORE partitions than cores, exactly like a cluster deployment —
-    * see the spill-aware sizing note in the builder scaladoc. */
+  /** Local session sized to `cpus` threads, with as many shuffle
+    * partitions — the mains' form. Host apps that need another
+    * partition count or conf build through [[builder]]. */
   def local(cpus: Int): SparkSession = {
-    val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .map { v =>
-        val n = try v.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_SHUFFLE_PARTITIONS must be a positive int, got '$v'")
-        }
-        require(n > 0,
-          s"SPARK_GRAFT_SHUFFLE_PARTITIONS must be > 0, got $n")
-        n
-      }.getOrElse(cpus)
-    // Event-log knob (measurement harness): per-stage wall/shuffle/spill
-    // attribution — tools/eventlog_stages.py reads the log back. Only
-    // effective when THIS call creates the session (builder-time conf);
-    // cwd-relative so cloned camps keep their logs inside themselves.
-    val b0 = builder(s"local[$cpus]", parts)
-    val b = sys.env.get("SPARK_GRAFT_EVENTLOG_DIR").map(_.trim)
-      .filter(_.nonEmpty).fold(b0) { d =>
-        val abs = new java.io.File(d).getAbsoluteFile
-        abs.mkdirs()
-        b0.config("spark.eventLog.enabled", "true")
-          .config("spark.eventLog.dir", abs.getPath)
-      }
-    val s = b.getOrCreate()
-    // Streaming state-store provider A/B knob (BENCH_STREAM harness):
-    // the default HDFS-backed provider keeps every version of state on
-    // the executor heap, which is the bottleneck the moment state
-    // outgrows memory; RocksDB keeps state off-heap with incremental
-    // checkpoints. Set to the provider FQCN to pin the whole family
-    // (transformWithState already forces RocksDB for itself — Spark 4
-    // requires it there).
-    stateProviderFrom(sys.env.get("SPARK_GRAFT_STATE_PROVIDER")).foreach(
-      p => s.conf.set("spark.sql.streaming.stateStore.providerClass", p))
-    // Verify-side dispatch knob (A/B harness): the byte budget under
-    // which Dedup.verifiedCommon broadcasts; 0 forces the bucketed
-    // path. Unset/empty/'none'/'off' keep the library default (1.5e9).
-    sys.env.get("SPARK_GRAFT_VERIFY_BROADCAST_BYTES")
-      .map(_.trim.toLowerCase).filter(v => v.nonEmpty && v != "none" && v != "off")
-      .foreach { v =>
-        val b = try v.toDouble catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_VERIFY_BROADCAST_BYTES must be a number, got '$v'")
-        }
-        require(b >= 0, s"SPARK_GRAFT_VERIFY_BROADCAST_BYTES must be >= 0, got $b")
-        s.conf.set(text.Dedup.VerifyBroadcastBytesKey, b.toString)
-      }
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
-  /** Provider-class resolution for the state-store knob: an unset,
-    * empty, or whitespace-only env var means "use Spark's default" —
-    * round 13 passed "" straight to `classForName("")`, which killed
-    * 6/10 streaming queries in the A/B's default legs. Factored out
-    * so the empty-value contract is unit-testable. */
-  private[graft] def stateProviderFrom(env: Option[String]): Option[String] =
-    env.map(_.trim).filter(_.nonEmpty)
-
-  /** Core-count from the driver contract env, default 4. */
-  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+  /** Core count from the driver contract env, default 4. */
+  def envCpus: Int = Env.positiveInt("SPARK_GRAFT_CPUS").getOrElse(4)
 }

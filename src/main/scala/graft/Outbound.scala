@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Delta
-import graft.sources.Sinks
+import graft.sources.{Sinks, Stage}
 
 /** EP2 — the outbound datalake → document-store job (`PUSH`, SURVEY.md §3):
   * read the structured output, select only-new documents via the
@@ -34,14 +34,14 @@ object Outbound {
   /** The sanitized dir name alone is lossy ('target/sf1x' and
     * 'target_sf1x' collide); an md5 suffix of the RAW dir makes the
     * stage path injective so two sources can never share one stage, and
-    * the owning pid keeps two PROCESSES on the same dir (campaign clone
-    * + working tree) from clobbering one stage mid-read — the
+    * the owning pid keeps two PROCESSES on the same dir (one working
+    * directory, two runs) from clobbering one stage mid-read — the
     * computeIfAbsent build-once cache is JVM-local, so the path must
     * be too. */
   private[graft] def sharedStagePath(dir: String): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    "/root/repo/target/stage/outbound_shared/" +
+    s"${Stage.root}/outbound_shared/" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + digest +
       s"_p${ProcessHandle.current().pid()}"
   }
@@ -54,7 +54,7 @@ object Outbound {
   }
 
   def push(spark: SparkSession, dir: String,
-      stagePath: String = "/root/repo/target/stage/outbound"): PushResult = {
+      stagePath: String = s"${Stage.root}/outbound"): PushResult = {
     // the pipeline output feeds the delta's both sides + validation:
     // persist instead of re-running the whole build per consumer
     val prospects = CacheScope.persist(Flagship.prospectPipeline(spark, dir))

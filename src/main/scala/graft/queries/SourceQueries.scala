@@ -422,15 +422,15 @@ object SourceQueries {
     * objects. Content bytes stay distributed, never on the driver.
     *
     * Staged-path-oracle protocol note (also S14): the DuckDB twin reads
-    * the files the query staged BY PATH, and the oracle SQL is a fixed
-    * string — so the stage path is keyed on the input dir
+    * the files the query staged BY PATH, and the oracle SQL is one
+    * string per JVM — so the stage path is keyed on the input dir
     * (Stage.forInput: a concurrent bench at another scale factor can
     * never overwrite this dir's stage mid-read, the r13 hazard) and the
     * oracle pins the path the DRIVER's correctness gate stages, i.e.
-    * its /root/testdata/sf0.01 Verify run. A Verify at any other dir
-    * still stages and dumps correctly; only the DuckDB twin is bound to
-    * the driver's gate dir — same single-sf contract as before, now
-    * clobber-proof. */
+    * `Stage.forInput` of its /root/testdata/sf0.01 Verify run. A Verify
+    * at any other dir still stages and dumps correctly; only the DuckDB
+    * twin is bound to the driver's gate dir — same single-sf contract
+    * as before, now clobber-proof. */
   private val binaryIngest = Q("q_s13_binary_ingest",
     (s, dir) => {
       val path = Stage.forInput("q_s13_binary_ingest", dir)
@@ -446,12 +446,12 @@ object SourceQueries {
             "part-([0-9]+)", 1).cast("long").as("file_idx"),
           col("length"))
     },
-    Some("""
+    Some(s"""
       SELECT CAST(regexp_extract(parse_filename(filename),
           'part-([0-9]+)', 1) AS BIGINT) AS file_idx,
         CAST(size AS BIGINT) AS length
       FROM read_blob(
-        '/root/repo/target/stage/q_s13_binary_ingest/_root_testdata_sf0.01/part-*.parquet')"""))
+        '${Stage.forInput("q_s13_binary_ingest", "/root/testdata/sf0.01")}/part-*.parquet')"""))
 
   /** S14: file-provenance columns (`_metadata.file_name`) — per-file row
     * counts and key ranges over a range-partitioned layout: the
@@ -473,13 +473,13 @@ object SourceQueries {
         .agg(count(lit(1)).as("n_rows"),
           min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
     },
-    Some("""
+    Some(s"""
       SELECT CAST(regexp_extract(parse_filename(filename),
           'part-([0-9]+)', 1) AS BIGINT) AS file_idx,
         count(*) AS n_rows,
         min(doc_id) AS min_id, max(doc_id) AS max_id
       FROM read_parquet(
-        '/root/repo/target/stage/q_s14_file_provenance/_root_testdata_sf0.01/part-*.parquet',
+        '${Stage.forInput("q_s14_file_provenance", "/root/testdata/sf0.01")}/part-*.parquet',
         filename = true)
       GROUP BY 1"""))
 
@@ -635,8 +635,8 @@ object SourceQueries {
         .select(col("mode"), struct(col("doc_id"), col("leadid"),
           col("lang"), col("source")).as("doc"))
       // Stage.work (per-input-dir + owning pid): the r14 advice's
-      // residual hazard — two processes on the SAME dir (campaign
-      // clone + working tree) clobbering one per-dir path mid-read
+      // residual hazard — two processes on the SAME dir (one working
+      // directory, two runs) clobbering one per-dir path mid-read
       val work = Stage.work("q_s5_outbound_sampled", dir)
       nested.write.mode("overwrite").parquet(work)
       s.read.parquet(work).select(col("mode"),

@@ -94,8 +94,8 @@ object Kmeans {
     // supR; vg is read twice; the caller may then self-join the
     // result), so carrying full lineage duplicates the super-fit
     // subtree exponentially — the JOB is fine but the driver burns
-    // minutes in generateTreeString on the blown-up tree (measured:
-    // LegBench sem at sf10x_de hung >5 min single-core in plan
+    // minutes in generateTreeString on the blown-up tree (measured: a
+    // SemDeDup timing run at sf10x hung >5 min single-core in plan
     // stringification). Checkpointing the k-row frames cuts every
     // branch at a LocalTableScan-sized stub; the checkpoint RDDs are
     // reclaimed by the ContextCleaner (same pattern as

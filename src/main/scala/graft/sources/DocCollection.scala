@@ -110,7 +110,7 @@ object DocCollection {
     * source. */
   def stageFixture(spark: SparkSession, dir: String): String = synchronized {
     val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val base = s"/root/repo/target/stage/doc_collection/$tag"
+    val base = s"${Stage.root}/doc_collection/$tag"
     val coll = s"$base/coll"
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -79,9 +79,8 @@ object Dedup {
     * time and both joins then read bucket-local pre-sorted files with
     * no exchange and no sort on this side — no broadcast memory
     * ceiling, executor-count-parallel at any corpus size.
-    * Tunable for measurement via the session conf (set 0 to force the
-    * bucketed path, mapped from SPARK_GRAFT_VERIFY_BROADCAST_BYTES by
-    * GraftSession). */
+    * Tunable for measurement via this session conf (set 0 to force the
+    * bucketed path); the dispatch tests pin each branch through it. */
   private[graft] val VerifyBroadcastBytesKey = "spark.graft.verifyBroadcastBytes"
   private def broadcastVerifyBytes(sh: DataFrame): Double =
     sh.sparkSession.conf.get(VerifyBroadcastBytesKey, "1.5e9").toDouble
@@ -493,8 +492,7 @@ object Dedup {
     * mode on vocabulary-saturating corpora, where the exact filter's
     * posting mass grows quadratically (measured: the sf100x leg
     * exceeds single-box spill disk uncapped). Recall under the cap is
-    * a measured quantity (LegBench pair reports it against the exact
-    * twin), not a silent loss.
+    * measured against the exact twin, not silently lost.
     */
   def prefixJaccardPairs(sh0: DataFrame, threshold: Double,
       pairBudgetPerDoc: Option[Long] = None): DataFrame = {
@@ -651,32 +649,20 @@ object Dedup {
     * RECALL is bounded, and `q_dedup_containment_recall` gates it
     * against the guaranteed-complete prefix-filtered twin (measured
     * 1.0 at sf0.001/0.01/0.1, caps 10/10/11; floor 0.95). */
-  /** The capped candidate dataflow shared by [[containmentPairsCapped]]
-    * and the stage-attribution probe (LegBench pairstage): returns
-    * (hp, dfreq, cap, cands) so the probe times the PRODUCTION stages
-    * instead of an inlined copy that can drift (the r15
-    * docHashSetsProbe lesson).
-    *
-    * hp: HASHED postings, shuffled by h exactly ONCE — the cached
-    * repartition's HashPartitioning satisfies the df groupBy and BOTH
-    * sides of the candidate self-join (InMemoryRelation preserves the
-    * cached plan's partitioning), so the corpus-sized frame crosses
-    * the network once as 16 B rows instead of three times as ~50 B
-    * string rows — at 2.5M docs the difference between in-flight
-    * shuffle files that exceed local disk and ones that fit with
-    * margin (PERF.md round 15). df/candidates on h equal df/candidates
-    * on s up to the 64-bit collision bound [[hashedPostings]] states;
-    * the string shingles are never cached or shuffled at all.
-    *
-    * cap: the MINIMUM of the recall knob (df quantile) and the cost
-    * knob (largest df with cumulative pair mass ≤ budget × n_docs),
-    * both computed EXACTLY from the df histogram — the only global
-    * windows order that histogram (≤ max(df) rows), never the corpus;
-    * the one-row result broadcasts into the candidate filter. */
-  private[graft] def cappedCandidateStages(sh0: DataFrame,
-      dfQuantile: Double, minCap: Long, pairBudgetPerDoc: Long)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  def containmentPairsCapped(sh0: DataFrame, threshold: Double,
+      dfQuantile: Double = 0.99, minCap: Long = 10L,
+      pairBudgetPerDoc: Long = 128L, withSizes: Boolean = false): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
+    // HASHED postings, shuffled by h exactly ONCE — the cached
+    // repartition's HashPartitioning satisfies the df groupBy and BOTH
+    // sides of the candidate self-join (InMemoryRelation preserves the
+    // cached plan's partitioning), so the corpus-sized frame crosses
+    // the network once as 16 B rows instead of three times as ~50 B
+    // string rows — at 2.5M docs the difference between in-flight
+    // shuffle files that exceed local disk and ones that fit with
+    // margin (PERF.md round 15). df/candidates on h equal df/candidates
+    // on s up to the 64-bit collision bound [[hashedPostings]] states;
+    // the string shingles are never cached or shuffled at all.
     val hp = graft.CacheScope.persist(
       hashedPostings(sh0).repartition(col("h")))
     val dfreq = graft.CacheScope.persist(
@@ -704,14 +690,6 @@ object Dedup {
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .distinct()
-    (hp, dfreq, cap, cands)
-  }
-
-  def containmentPairsCapped(sh0: DataFrame, threshold: Double,
-      dfQuantile: Double = 0.99, minCap: Long = 10L,
-      pairBudgetPerDoc: Long = 128L, withSizes: Boolean = false): DataFrame = {
-    val (hp, _, _, cands) =
-      cappedCandidateStages(sh0, dfQuantile, minCap, pairBudgetPerDoc)
     verifiedCommon(hp, cands, containmentGate(threshold))
       .withColumn("containment", col("n_common").cast("double") /
         least(col("na"), col("nb")))

@@ -18,7 +18,7 @@ object Pipelines {
     * lesson: a mirror drifts). The composition calls the probe at each
     * stage seam with a stable stage name and the seam's frame; the
     * default is the identity, so production plans are untouched.
-    * `LegBench`'s `flagship` family passes a materializing probe
+    * A caller timing the stages passes a materializing probe
     * (persist + count + delta clock) so all work since the previous
     * seam — including driver-side segments like `Distill.trainGate`'s
     * GD rounds — lands in the named stage's wall. Attribution mode

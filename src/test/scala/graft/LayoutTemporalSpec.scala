@@ -154,8 +154,8 @@ class LayoutTemporalSpec extends SparkSuite {
   }
 
   test("compactWrite caps rows per file and keeps ranges contiguous") {
-    import graft.sources.Sinks
-    val path = "/root/repo/target/stage/test_compact_write"
+    import graft.sources.{Sinks, Stage}
+    val path = s"${Stage.root}/test_compact_write"
     Sinks.compactWrite(spark.range(500).toDF("id"), path,
       col("id"), nPartitions = 4, maxRecordsPerFile = 100L)
     val perFile = spark.read.parquet(path)
@@ -173,8 +173,8 @@ class LayoutTemporalSpec extends SparkSuite {
   }
 
   test("z-ordered layout + manifest pruning opens a fraction of the files") {
-    import graft.sources.DataSkipping
-    val path = "/root/repo/target/stage/test_skip_pruned"
+    import graft.sources.{DataSkipping, Stage}
+    val path = s"${Stage.root}/test_skip_pruned"
     // 64k rows over a 256x256 key grid, clustered on the Morton key
     val grid = spark.range(256L * 256L)
       .select(col("id"), (col("id") % 256).as("x"),

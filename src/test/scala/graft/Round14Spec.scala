@@ -6,10 +6,9 @@ import graft.sources.DocCollection
 
 /** Round-14 seams: the bounded-sample document-collection reader's
   * unit contracts (the r13 queries pin the end-to-end hashes; these
-  * pin the WHY at the operator level), the staged-fixture idempotence
-  * that makes the registered queries read-only, and the state-store
-  * knob's empty-env contract (the one-line bug that invalidated the
-  * r13 A/B campaign).
+  * pin the WHY at the operator level), and the staged-fixture
+  * idempotence that makes the registered queries read-only. The
+  * empty-env contract once pinned here lives in EnvSpec.
   */
 class Round14Spec extends SparkSuite {
 
@@ -149,12 +148,5 @@ class Round14Spec extends SparkSuite {
       assert(dropped1.filter(_ < 60).subsetOf(dropped2),
         "a doc dropped against the smaller index kept against the larger")
     }
-  }
-
-  test("state-store knob: unset/empty/whitespace mean Spark's default") {
-    assert(GraftSession.stateProviderFrom(None).isEmpty)
-    assert(GraftSession.stateProviderFrom(Some("")).isEmpty)
-    assert(GraftSession.stateProviderFrom(Some("  ")).isEmpty)
-    assert(GraftSession.stateProviderFrom(Some(" x.Y ")) == Some("x.Y"))
   }
 }

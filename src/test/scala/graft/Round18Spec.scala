@@ -9,15 +9,14 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import graft.text.Dedup
 
 /** Round-18 seam: the AUTO bucketed-dispatch handoff (verdict #2). The
-  * est32 > fence regime had only ever run fence-PINNED
-  * (`SPARK_GRAFT_FENCES=0`); these tests pin the auto comparison at the
-  * exact boundary — fence = est32 selects the two-phase broadcast,
+  * est32 > fence regime had only ever run with the fence pinned to 0
+  * (the bucketed path forced); these tests pin the auto comparison at
+  * the exact boundary — fence = est32 selects the two-phase broadcast,
   * fence = est32 − 1 selects the bucketed path, outputs identical —
   * and pin the [[GenScale.widenText]] invariants that make the
-  * DEFAULT-fence engagement reachable on this box (the campaign's
-  * high-postings corpus: postings/doc ×w ⇒ est32 crosses 1.5 GB at an
-  * on-disk-feasible doc count; `tools/campaign.sh` leg `autodispatch`
-  * is the measurement twin of the boundary tests here).
+  * DEFAULT-fence engagement reachable on one box (a high-postings
+  * corpus: postings/doc ×w ⇒ est32 crosses 1.5 GB at an
+  * on-disk-feasible doc count).
   */
 class Round18Spec extends SparkSuite {
 
