@@ -1,7 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Decimal
 
 /** Gate distillation: train a linear (logistic-regression) scorer to
   * mimic an expensive boolean quality gate, then score every document
@@ -20,19 +23,19 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: features are (doc, bucket) rows — one explode + one
   * groupBy, the same volume as hashingTf — cached hash-partitioned by
-  * doc_id with the label folded in; each GD iteration is then one
-  * map-only literal-map weight lookup (weights are ≤ dim+5 entries
-  * riding the plan as one literal, no per-round broadcast build), a
-  * shuffle-free per-doc sum + residual off the cached partitioning,
-  * and ONE ≤ dim+5-key gradient reduce — corpus-linear, no all-pairs,
-  * no driver-side data loops (the loop is over the FIXED iteration
-  * count; the gradient collect is ≤ dim+5 aggregate rows).
+  * doc_id with the label folded in; each GD iteration is then ONE
+  * plain aggregate job over the cached rows: per partition, each doc's
+  * score and residual, then per-bucket gradient partials, merged into
+  * ≤ dim+5 sums on the driver — corpus-linear, no
+  * shuffle, no per-round query planning, no driver-side data loops
+  * (the loop is over the FIXED iteration count). Scoring is a
+  * DataFrame: the weights ride the plan as one map literal.
   *
   * Train and score are SEPARATE entry points ([[trainGate]] /
   * [[scoreGate]]) because that is the production shape: the teacher
   * gate runs on a bounded labeled sample, the learned ≤ dim+5-double
   * weight vector ships to the driver, and scoring the remaining
-  * 100 TB is one broadcast join + one per-doc sum per document —
+  * 100 TB is one map-literal lookup + one per-doc sum per document —
   * no iteration touches the full corpus. [[distillGate]] composes
   * the two over one input for the oracle-gated registered query.
   */
@@ -77,16 +80,15 @@ object Distill {
 
   /** The label rides every feature row (ONE corpus join at build time
     * instead of one per GD round), and the frame is hash-partitioned
-    * by doc_id ONCE before caching: the per-round score aggregation
-    * and the gradient join both key on doc_id, so each round's whole
-    * dataflow reuses the cached partitioning — the only per-round
-    * shuffle left is the ≤ dim+5-key gradient reduce. (The round-12
+    * by doc_id ONCE before caching: every doc's rows sit in one
+    * partition, so a GD round scores docs and sums gradient partials
+    * partition-locally and never shuffles. (The round-12
     * shape re-shuffled feats by doc_id twice per round plus re-counted
     * the corpus inside every gradient job: 18.0 s at sf0.1, 7.1% of
     * the whole bench, all job floor.)
     *
     * Partition count is SIZE-ADAPTIVE (r18, guide §2.2/§2.4): the GD
-    * loop launches 2 passes over this cache per round × `iters`
+    * loop launches 1 pass over this cache per round × `iters`
     * rounds, so its partition count is a per-round task-floor
     * multiplier — at bench scale the session default (one partition
     * per core) put 64 near-empty tasks in every round's critical path
@@ -98,7 +100,7 @@ object Distill {
     * parallelism. Partitioning cannot perturb results: every per-row
     * term is rounded to 8 dp and summed as DECIMAL(20,8), so the
     * reduction is order-exact (object scaladoc). */
-  private def labeledFeatures(docs: DataFrame, label: Column,
+  private[text] def labeledFeatures(docs: DataFrame, label: Column,
       dim: Int, ndocs: Long): DataFrame = {
     val ceilParts =
       docs.sparkSession.sessionState.conf.numShufflePartitions
@@ -114,14 +116,12 @@ object Distill {
   private val sigmoid = round(lit(1.0) / (lit(1.0) + exp(-col("s"))), 6)
 
   /** The weight vector as a MAP LITERAL column, `w(b) = element_at(m, b)`
-    * — replacing the per-round broadcast-joined local frame (r18). The
-    * join form paid a broadcast build plus a BroadcastHashJoin stage in
-    * EVERY GD round's plan; the ≤ dim+5-entry map rides the plan as one
-    * literal reference, so a round is now a map-only projection over the
-    * cached feature partitioning (0.48 → 0.39 s/round at sf0.1 from this
-    * change alone, r18 plans/). Value-identical: every feature bucket
-    * trained on is a key of `m` (trainGate seeds the weight map from the
-    * frame's own distinct buckets), and at scoring time an unigram
+    * — replacing a broadcast-joined local frame (r18): the ≤ dim+5-entry
+    * map rides the plan as one literal reference, so scoring is a
+    * map-only projection with no broadcast build. Value-identical:
+    * every feature bucket trained on is a key of `m` (round 1 of
+    * [[gdTrain]] seeds the weight map from every bucket the frame
+    * holds), and at scoring time an unigram
     * bucket the sample never produced hits no key → element_at yields
     * NULL → the per-term product is NULL → sum() skips it, exactly as
     * the old inner join dropped that row; every doc still appears
@@ -143,7 +143,7 @@ object Distill {
   /** scores AND residual input in one aggregation pass over a LABELED
     * feature frame: y is constant per doc, so max() re-emits it
     * without a second join against the label frame. */
-  private def scored(feats: DataFrame, w: Map[Int, Double]): DataFrame =
+  private[text] def scored(feats: DataFrame, w: Map[Int, Double]): DataFrame =
     feats
       .where(nonEmptyW(w))
       .select(col("doc_id"), col("y"),
@@ -153,37 +153,137 @@ object Distill {
 
   /** `iters` batch-GD rounds over a persisted labeled feature frame;
     * model state lives on the DRIVER — the MLlib topology: the data
-    * stays distributed, the ≤ dim+5-double weight vector rides a
-    * broadcast local relation each round, and each round's gradient
-    * comes back as a fenced bounded collect (≤ dim+5 (b, g) rows of
-    * aggregates, never row data). */
-  private def gdTrain(feats: DataFrame, ndocs: Double, iters: Int,
+    * stays distributed, the ≤ dim+5-double weight vector ships in each
+    * round's task closure, and each round is ONE plain aggregate job
+    * over the cache's rows ([[roundGrads]]). The RDD is taken once
+    * before the loop, so no round pays Catalyst analysis, optimization,
+    * AQE planning or codegen. The cache's hash(doc_id) partitioning
+    * puts every doc's rows in one partition, and the per-partition
+    * partials (≤ dim+5 decimals each) merge on the driver without a
+    * tree level, so no round shuffles at any partition count. Round 1
+    * (all weights 0.0) also returns the set of buckets it saw, which
+    * seeds the weight map without a separate distinct-bucket job; an
+    * empty frame sees none and trains the empty map. */
+  private[text] def gdTrain(feats: DataFrame, ndocs: Double, iters: Int,
       lr: Double): Map[Int, Double] = {
-    def round8(v: Double): Double =
-      BigDecimal(v).setScale(8, BigDecimal.RoundingMode.HALF_UP).toDouble
-    var wMap: Map[Int, Double] =
-      feats.select(col("b")).distinct().collect()
-        .map(r => r.getInt(0) -> 0.0).toMap
-    for (_ <- 1 to iters) {
-      val resid = scored(feats, wMap)
-        .select(col("doc_id"), (sigmoid - col("y")).as("r"))
-      // shuffle-hash, not sort-merge: both sides are already
-      // hash(doc_id)-partitioned (feats from the cache, resid from its
-      // aggregation), so the hint swaps the per-round re-SORT of the
-      // corpus-sized feature frame for a partition-local hash build on
-      // the one-row-per-doc residual side — no broadcast, no exchange
-      val grads = feats.join(resid.hint("shuffle_hash"), "doc_id")
-        .select(col("b"),
-          round(col("x") * col("r"), 8).cast("decimal(20,8)").as("g"))
-        .groupBy(col("b"))
-        .agg(sum(col("g")).cast("double").as("gsum"))
-        .select(col("b"),
-          round(col("gsum") / lit(ndocs), 8).as("g"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val rows = feats.rdd
+    val cols = Seq("doc_id", "b", "x", "y").map(feats.schema.fieldIndex)
+    var wMap = Map.empty[Int, Double]
+    for (i <- 1 to iters) {
+      val w = if (i == 1) None else Some(wMap)
+      val grads = rows
+        .mapPartitions(it => Iterator(roundGrads(it, cols, w)))
+        .aggregate(mutable.HashMap.empty[Int, Decimal])(mergeGrads, mergeGrads)
+      if (i == 1) wMap = grads.keys.map(_ -> 0.0).toMap
       wMap = wMap.map { case (b, v) =>
-        b -> round8(v - lr * grads.getOrElse(b, 0.0)) }
+        val g = grads.get(b).flatMap(Option(_))
+          .fold(0.0)(d => round8(d.toDouble / ndocs))
+        b -> round8(v - lr * g) }
     }
     wMap
+  }
+
+  /** Spark's `round(v, 8)` on a double (HALF_UP on the decimal string;
+    * NaN and ±Inf pass through). */
+  private def round8(v: Double): Double = roundHalfUp(v, 8)
+
+  private def roundHalfUp(v: Double, scale: Int): Double =
+    if (v.isNaN || v.isInfinite) v
+    else java.math.BigDecimal.valueOf(v)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** Spark's `CAST(v AS DECIMAL(20,8))` under ANSI: overflow throws. */
+  private def dec20(v: Double): Decimal = {
+    val d = Decimal(v)
+    if (!d.changePrecision(20, 8))
+      throw new ArithmeticException(s"$v overflows DECIMAL(20,8)")
+    d
+  }
+
+  /** One GD round over one partition of the labeled feature frame, the
+    * exact arithmetic of the DataFrame form the oracle unrolls:
+    *   s_doc = Σ CAST(round(x·w(b), 8) AS DECIMAL(20,8)) → double,
+    *   r_doc = round(1 / (1 + exp(-s_doc)), 6) − max(y),
+    *   g_b   = Σ CAST(round(x·r_doc, 8) AS DECIMAL(20,8)),
+    * every NULL (x, a bucket with no weight, y, a doc with no non-NULL
+    * term) skipped as SQL sum() skips it. Returns every bucket seen,
+    * mapped to its partial gradient sum, or null when all of its terms
+    * were NULL. `w = None` is round 1: every bucket weighs 0.0.
+    *
+    * A doc's rows are not contiguous in the partition, so the rows with
+    * a non-NULL x are buffered once. Presence rows (x == 1.0) make up
+    * most of the frame, and for them round(x·w, 8) and round(x·r, 8)
+    * depend only on the bucket and the doc: those Decimals are built
+    * once per bucket and once per doc instead of once per row. */
+  private def roundGrads(rows: Iterator[Row], cols: Seq[Int],
+      w: Option[Map[Int, Double]]): mutable.HashMap[Int, Decimal] = {
+    val Seq(di, bi, xi, yi) = cols
+    val weight: Int => Option[Double] = w.fold((_: Int) => Option(0.0))(m => m.get)
+    val oneTerm = mutable.HashMap.empty[Int, Decimal]
+    def term(b: Int, x: Double): Decimal = weight(b) match {
+      case None => null
+      case Some(wb) =>
+        if (x == 1.0) oneTerm.getOrElseUpdate(b, dec20(round8(1.0 * wb)))
+        else dec20(round8(x * wb))
+    }
+    val grads = mutable.HashMap.empty[Int, Decimal]
+    val docIdx = new java.util.HashMap[Any, Integer]
+    val sums = mutable.ArrayBuffer.empty[Decimal]
+    val ys = mutable.ArrayBuffer.empty[java.lang.Long]
+    val rowDoc = mutable.ArrayBuilder.make[Int]
+    val rowB = mutable.ArrayBuilder.make[Int]
+    val rowX = mutable.ArrayBuilder.make[Double]
+    rows.foreach { row =>
+      val b = row.getInt(bi)
+      if (!grads.contains(b)) grads(b) = null
+      // a null doc_id never matches the gradient join: seen, not trained
+      if (!row.isNullAt(di)) {
+        var d: Integer = docIdx.get(row.get(di))
+        if (d == null) {
+          d = sums.length
+          docIdx.put(row.get(di), d)
+          sums += null
+          ys += null
+        }
+        if (!row.isNullAt(yi)) {
+          val y = row.getLong(yi)
+          if (ys(d) == null || ys(d) < y) ys(d) = y
+        }
+        // a NULL x adds no score term and no gradient term
+        if (!row.isNullAt(xi)) {
+          val x = row.getDouble(xi)
+          val t = term(b, x)
+          if (t != null) sums(d) = if (sums(d) == null) t else sums(d) + t
+          rowDoc += d; rowB += b; rowX += x
+        }
+      }
+    }
+    val resid = sums.indices.map { d =>
+      if (sums(d) == null || ys(d) == null) None
+      else Some(roundHalfUp(1.0 / (1.0 + StrictMath.exp(-sums(d).toDouble)), 6)
+        - ys(d).toDouble)
+    }
+    val residOne = resid.map(_.map(r => dec20(round8(1.0 * r))).orNull)
+    val (doc, bs, xs) = (rowDoc.result(), rowB.result(), rowX.result())
+    for (i <- doc.indices; r <- resid(doc(i))) {
+      val g = if (xs(i) == 1.0) residOne(doc(i)) else dec20(round8(xs(i) * r))
+      val p = grads(bs(i))
+      grads(bs(i)) = if (p == null) g else p + g
+    }
+    grads
+  }
+
+  /** Merge partial gradient maps: a bucket's sums add; null (all terms
+    * NULL so far) is sum()'s identity. */
+  private def mergeGrads(a: mutable.HashMap[Int, Decimal],
+      c: mutable.HashMap[Int, Decimal]): mutable.HashMap[Int, Decimal] = {
+    c.foreach { case (b, g) =>
+      a.get(b) match {
+        case Some(p) if p != null => if (g != null) a(b) = p + g
+        case _ => a(b) = g
+      }
+    }
+    a
   }
 
   /** Train the student on `docs` (the bounded teacher-labeled sample)
@@ -197,8 +297,8 @@ object Distill {
       iters, lr)
   }
 
-  /** Score `docs` with a trained weight vector: one broadcast join +
-    * one per-doc sum — the 100 TB pass. Output (doc_id, score,
+  /** Score `docs` with a trained weight vector: one map-literal lookup
+    * + one per-doc sum — the 100 TB pass. Output (doc_id, score,
     * predicted); the identical rounding discipline as training, so a
     * doc scored here equals the same doc scored inside
     * [[distillGate]]. */

@@ -20,7 +20,7 @@ object Pipelines {
     * default is the identity, so production plans are untouched.
     * A caller timing the stages passes a materializing probe
     * (persist + count + delta clock) so all work since the previous
-    * seam — including driver-side segments like `Distill.trainGate`'s
+    * seam — including construction-time jobs like `Distill.trainGate`'s
     * GD rounds — lands in the named stage's wall. Attribution mode
     * therefore materializes each seam; its per-stage walls sum to an
     * end-to-end that is checkable against the unprobed run. */

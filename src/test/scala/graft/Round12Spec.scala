@@ -149,23 +149,6 @@ class Round12Spec extends SparkSuite {
     }
   }
 
-  test("distilled gate scorer beats the majority-class base rate") {
-    graft.CacheScope.scoped {
-      val docs = graft.sources.Tables.load(spark, sf, "documents")
-      val out = graft.text.Distill.distillGate(docs,
-        TextAnalysis.gopherMetrics(10, 1000, 2.0, 10.0, 0.2, 0.2).last,
-        dim = 64, iters = 20, lr = 16.0)
-      val r = out.agg(avg(col("label")), avg(col("correct")),
-        count(lit(1))).head()
-      val base = math.max(r.getDouble(0), 1.0 - r.getDouble(0))
-      assert(r.getLong(2) == docs.count(), "one scored row per document")
-      // the student must actually LEARN: strictly above always-majority
-      // (measured 0.940 vs 0.926 at sf0.001 — DistillProbe)
-      assert(r.getDouble(1) > base,
-        s"accuracy ${r.getDouble(1)} must beat base rate $base")
-    }
-  }
-
   test("Outbound.shared stage paths are injective across colliding dirs") {
     // lossy sanitization alone maps both of these to 'target_sfX'
     assert(Outbound.sharedStagePath("target/sfX") !=

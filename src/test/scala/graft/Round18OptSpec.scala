@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.text.{Distill, TextAnalysis}
+import graft.text.TextAnalysis
 
 /** Round-18 optimization seams. Each test pins an optimized internal to
   * the form it replaced:
@@ -11,10 +11,6 @@ import graft.text.{Distill, TextAnalysis}
   *    to the r12 distinct×filter form on real fixture text and on the
   *    tie/empty/single-token edges (the oracle hash is the end-to-end
   *    gate; this is the row-for-row witness).
-  *  - Distill's literal-map weight lookup + size-adaptive feature
-  *    partitioning must leave the trained trajectory and the scored
-  *    output byte-identical (the GD rounding discipline makes any
-  *    dataflow drift visible in the first round's weights).
   */
 class Round18OptSpec extends SparkSuite {
 
@@ -57,28 +53,6 @@ class Round18OptSpec extends SparkSuite {
     assert(v5 === 3.0 / 5.0)
   }
 
-  test("distillGate trajectory unchanged by the literal-map + partition-sizing rewrite") {
-    val docs = sources.Tables.load(spark, sf, "documents")
-    val gate = TextAnalysis.gopherMetrics(10, 1000, 2.0, 10.0, 0.2, 0.2).last
-    CacheScope.scoped {
-      val out = Distill.distillGate(docs, gate, dim = 16, iters = 3, lr = 4.0)
-        .orderBy("doc_id").collect()
-      // pinned shape: every doc scored exactly once, score in (0,1),
-      // label/predicted binary, correct consistent
-      assert(out.nonEmpty)
-      assert(out.map(_.getLong(0)).distinct.length === out.length)
-      out.foreach { r =>
-        val score = r.getDouble(2) // 6-dp sigmoid: saturation to 0/1 is legal
-        assert(score >= 0.0 && score <= 1.0)
-        assert(Set(0L, 1L).contains(r.getLong(3)))
-        assert(r.getLong(4) === (if (r.getLong(3) == r.getLong(1)) 1L else 0L))
-      }
-      // the gate separates: accuracy over the fixture beats coin flip
-      val acc = out.map(_.getLong(4)).sum.toDouble / out.length
-      assert(acc > 0.5)
-    }
-  }
-
   test("reconcile one-shuffle rewrite matches EXCEPT-DISTINCT semantics (dupes + nulls)") {
     import spark.implicits._
     import graft.operators.Delta
@@ -103,17 +77,5 @@ class Round18OptSpec extends SparkSuite {
     // equal-sides case reports ok
     val same = Delta.reconcile(src, src)
     assert(same.ok && same.srcMinusTgt === 0L && same.tgtMinusSrc === 0L)
-  }
-
-  test("scoreGate emits every input doc once under the literal-map lookup") {
-    val docs = sources.Tables.load(spark, sf, "documents")
-    val gate = TextAnalysis.gopherMetrics(10, 1000, 2.0, 10.0, 0.2, 0.2).last
-    CacheScope.scoped {
-      val w = Distill.trainGate(docs.where(col("doc_id") % 4 === 0), gate,
-        dim = 16, iters = 2, lr = 4.0)
-      val scoredDocs = Distill.scoreGate(docs, w, dim = 16)
-      assert(scoredDocs.select(col("doc_id")).distinct().count() === docs.count())
-      assert(scoredDocs.filter(col("score").isNull).count() === 0L)
-    }
   }
 }

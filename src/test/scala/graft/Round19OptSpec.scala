@@ -2,13 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.text.{Dedup, Distill, TextAnalysis}
+import graft.text.{Dedup, TextAnalysis}
 
 /** Round-19 optimization seams. Each test pins an optimized internal to
   * the behavior it must preserve:
-  *  - Distill's empty-weight-map guard (ADVICE r18): an empty training
-  *    corpus must degrade to a typed EMPTY result — the pre-r18
-  *    empty-weight-frame inner-join behavior — not throw.
   *  - bm25TopK's query-vocabulary semi-join pushdown (r19): restricting
   *    the posting stream to query-vocabulary tokens before the tf/df
   *    aggregations must leave scores, ranks and n_terms row-identical
@@ -23,25 +20,6 @@ import graft.text.{Dedup, Distill, TextAnalysis}
   *    endpoints; both generators are exact over their inputs).
   */
 class Round19OptSpec extends SparkSuite {
-
-  test("distillGate/scoreGate degrade to empty output on an empty corpus") {
-    import spark.implicits._
-    val empty = spark.createDataset(Seq.empty[(Long, String)])
-      .toDF("doc_id", "text")
-    val gated = Distill.distillGate(empty, lit(1L), dim = 8, iters = 1)
-    assert(gated.count() === 0L)
-    assert(gated.columns.toSeq ===
-      Seq("doc_id", "label", "score", "predicted", "correct"))
-    // scoring a NON-empty corpus with an empty (untrained) weight map:
-    // the pre-r18 inner join against an empty weight frame was empty
-    val docs = Seq((1L, "alpha beta"), (2L, "gamma")).toDF("doc_id", "text")
-    val scoredEmpty = Distill.scoreGate(docs, Map.empty[Int, Double])
-    assert(scoredEmpty.count() === 0L)
-    assert(scoredEmpty.columns.toSeq === Seq("doc_id", "score", "predicted"))
-    // and a trained map still scores every doc (the guard folds away)
-    val w = Distill.trainGate(docs, lit(1L), dim = 8, iters = 1)
-    assert(Distill.scoreGate(docs, w).count() === 2L)
-  }
 
   test("bm25TopK query-vocab pushdown: row-identical to the unrestricted-df form") {
     val docs = sources.Tables.load(spark, sf, "documents")
